@@ -25,6 +25,7 @@ view instead of erroring on an existing ``delta_<view>`` table.
 from __future__ import annotations
 
 import re
+from concurrent.futures import wait
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -942,21 +943,15 @@ class IVMEngine:
         is per-view-name keyed and the state store is one directory per
         view, so concurrent drives of DISTINCT names do not contend.
         """
-        import threading
-
         names = list(names)
         if len(set(names)) != len(names):
             raise IVMError("merge_views requires distinct view names")
-        if len(names) <= 1:
-            return [self.merge_view(n) for n in names]
-        sem = threading.Semaphore(parallelism or len(names))
-
-        def drive(n: str) -> DataFrame:
-            with sem:
-                return self.merge_view(n)
-
-        futs = [pin.submit(lambda n=n: drive(n)) for n in names]
-        return [f.result() for f in futs]
+        # a failed merge re-raises only after every sibling finished
+        # (pin.run_all): a merge that threw committed nothing, so
+        # retrying just the failed names is safe
+        return pin.run_all(
+            [lambda n=n: self.merge_view(n) for n in names], parallelism
+        )
 
     def merge_view_cdc(self, name: str) -> DataFrame:
         """Merge like :meth:`merge_view`, but return the *view-state CDC*
@@ -1156,41 +1151,14 @@ class IVMEngine:
         for n in sketch_affected:
             self._delta_views[n] = sk_plans[n]
         ordered = affected + sketch_affected
-        if len(ordered) > 1:
-            # affected views are pairwise independent by construction
-            # (user cascades stay manual; composite inners advance inside
-            # their outer's epilogue) — merge them concurrently, same
-            # thread-per-view drive as merge_views
-            import threading
-
-            sem = threading.Semaphore(8)
-
-            def drive(v: str) -> DataFrame:
-                with sem:
-                    return self.merge_view(v)
-
-            futs = [pin.submit(lambda v=v: drive(v)) for v in ordered]
-            out = dict(zip(ordered, (f.result() for f in futs)))
-        else:
-            out = {v: self.merge_view(v) for v in ordered}
-        pending = list(self._deltas)
-        if len(pending) > 1:
-            # independent per-table base folds (distinct engine keys) —
-            # concurrent, same argument as the merge drive above
-            import threading
-
-            sem2 = threading.Semaphore(8)
-
-            def fold(t: str) -> None:
-                with sem2:
-                    self.apply_delta(t)
-
-            for f in [pin.submit(lambda t=t: fold(t)) for t in pending]:
-                f.result()
-        else:
-            for t in pending:
-                self.apply_delta(t)
-        return out
+        # affected views are pairwise independent by construction (user
+        # cascades stay manual; composite inners advance inside their
+        # outer's epilogue) — merge them concurrently, as merge_views
+        merged = pin.run_all([lambda v=v: self.merge_view(v) for v in ordered], 8)
+        # independent per-table base folds (distinct engine keys) —
+        # concurrent, same argument as the merge drive above
+        pin.run_all([lambda t=t: self.apply_delta(t) for t in list(self._deltas)], 8)
+        return dict(zip(ordered, merged))
 
     def _advance_aux(self, name: str) -> dict[str, DataFrame]:
         """Advance the view's auxiliary value multisets with the current
@@ -1532,7 +1500,13 @@ class IVMEngine:
         )
         f_merge = pin.submit(lambda: self.merge_view(name))
         f_base = pin.submit(lambda: fold_plan.localCheckpoint(eager=True))
-        out = f_merge.result()  # merge failure: world unchanged, re-raise
+        try:
+            out = f_merge.result()
+        except BaseException:
+            # merge failure: world unchanged — but let the fold finish
+            # first, so a retry never stacks a second fold on this one
+            wait([f_base])
+            raise
         try:
             new_base = f_base.result()
         except Exception as e:

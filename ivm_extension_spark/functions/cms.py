@@ -173,40 +173,3 @@ def cms_sketch_sql(
         WHERE {value_col} IS NOT NULL
         GROUP BY {g}row_j, {h}
     """
-
-
-def cms_heavy_hitters_sql(
-    table: str,
-    value_col: str,
-    phi: float = 0.02,
-    d: int = D_DEFAULT,
-    w: int = W_DEFAULT,
-) -> str:
-    """DuckDB twin of :func:`cms_heavy_hitters` (no group columns) —
-    the IDENTICAL md5 bucketing, sum, min-over-rows, and threshold."""
-    h_item = (
-        f"CAST(('0x' || substr(md5(CAST(i.{value_col} AS VARCHAR) || '#' || "
-        f"CAST(rj.row_j AS VARCHAR)), 1, 15)) AS BIGINT) % {w}"
-    )
-    return f"""
-        WITH sk AS ({cms_sketch_sql(table, (), value_col, d, w)}),
-        items AS (
-            SELECT DISTINCT {value_col} FROM {table}
-            WHERE {value_col} IS NOT NULL
-        ),
-        probes AS (
-            SELECT i.{value_col}, rj.row_j, {h_item} AS bucket
-            FROM items i CROSS JOIN (SELECT unnest(range({d})) AS row_j) rj
-        ),
-        est AS (
-            SELECT p.{value_col},
-                   CAST(min(coalesce(s.c, 0)) AS BIGINT) AS est_count
-            FROM probes p LEFT JOIN sk s
-              ON s.row_j = p.row_j AND s.bucket = p.bucket
-            GROUP BY p.{value_col}
-        )
-        SELECT {value_col}, est_count
-        FROM est
-        WHERE est_count >= CAST({float(phi)!r} AS DOUBLE) *
-              (SELECT sum(c) FROM sk WHERE row_j = 0)
-    """

@@ -181,7 +181,7 @@ def asof_join_delta(
         bag_diff_cdc,
     )
     from ivm_extension_spark.operators.rewrite import MULT_COL
-    from ivm_extension_spark.operators.thetajoin import _ns_join
+    from ivm_extension_spark.operators.countjoin import probe_join
 
     if d_left is None and d_right is None:
         raise ValueError("at least one side needs a delta")
@@ -195,7 +195,7 @@ def asof_join_delta(
     def _affected(df: DataFrame) -> DataFrame:
         # NULL-safe: a NULL key is a real as-of group (window partitions
         # group NULLs), so NULL-key delta rows must restrict it too
-        return _ns_join(df, ak, keys, "leftsemi")
+        return probe_join(df, ak, keys, "leftsemi")
 
     # the two affected-side restrictions are independent plans — pin
     # them CONCURRENTLY so the narrow checkpoint jobs overlap (pin.py)

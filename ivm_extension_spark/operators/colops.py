@@ -24,7 +24,9 @@ or schema-derived identifiers pass through here, always backtick-quoted
 
 from __future__ import annotations
 
+import re
 import threading
+import weakref
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -34,28 +36,52 @@ def q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+# SQL string literals ('…' / "…", backslash escapes) and backtick-quoted
+# identifiers are opaque to placeholder binding: a ``{l}`` inside a user
+# condition's literal or a quoted column name is data, not a slot
+_SLOT_RX = re.compile(
+    r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|`(?:[^`]|``)*`|\{(\w+)\}"
+)
+# spark.sql.globalTempDatabase per SparkContext: a static conf, read once
+_GLOBAL_DB: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
 def sql_over(text: str, **dfs: DataFrame) -> DataFrame:
     """Run one SQL text over the given DataFrames — ``{name}``
     placeholders in ``text`` are bound by registering each frame under a
-    thread-locally REUSED temp-view slot (``spark.sql`` analyzes
+    thread-locally REUSED global temp-view slot (``spark.sql`` analyzes
     eagerly, so the returned plan holds the resolved relations and the
     slot can be overwritten by the next construction).
 
+    Session-safe: global temp views are visible to every session of the
+    SparkContext, so frames from different sessions (a ``foreachBatch``
+    micro-batch lives on a cloned session) bind in the one query.
+    Literal-safe: placeholders are bound only outside string literals
+    and backtick-quoted identifiers (``_SLOT_RX``), so user condition
+    text spliced into a template is never rewritten.
+
     Cost model: ``len(dfs) + 1`` round trips and ONE Catalyst analysis
     pass for the whole construction, however many renames / joins /
-    projections / filters the text composes — the round-10 extension of
-    this module's diet (a fused rule level that took 4 Dataset calls
-    paid 4 analyses of ever-growing trees).  Slots are per (thread,
+    projections / filters the text composes.  Slots are per (thread,
     position): concurrent ``build_all`` branches never collide, and at
-    most ``threads x slots`` views ever exist per session."""
+    most ``threads x slots`` views ever exist."""
     spark = next(iter(dfs.values())).sparkSession
+    db = _GLOBAL_DB.get(spark.sparkContext)
+    if db is None:
+        db = _GLOBAL_DB[spark.sparkContext] = spark.conf.get(
+            "spark.sql.globalTempDatabase"
+        )
+    views = {}
     for i, (k, df) in enumerate(dfs.items()):
         v = f"__ivm_sql_{threading.get_ident()}_{i}"
-        df.createOrReplaceTempView(v)
-        # plain replace, not str.format: a user-supplied theta condition
-        # may legitimately contain braces inside string literals
-        text = text.replace("{" + k + "}", v)
-    return spark.sql(text)
+        df.createOrReplaceGlobalTempView(v)
+        views[k] = f"{q(db)}.{q(v)}"
+    return spark.sql(
+        _SLOT_RX.sub(
+            lambda m: views.get(m.group(1), m.group(0)) if m.group(1) else m.group(0),
+            text,
+        )
+    )
 
 
 def ns_eq(cols, prefix: str) -> Column:
@@ -72,18 +98,6 @@ def renamed(df: DataFrame, cols, prefix: str, keep_rest: bool = False) -> DataFr
     if keep_rest:
         exprs += [q(c) for c in df.columns if c not in cols]
     return df.selectExpr(*exprs)
-
-
-def null_pad(df: DataFrame, other: DataFrame, key_cols) -> DataFrame:
-    """Append ``other``'s non-key columns to ``df`` as typed NULLs (the
-    preserved-side padding) in one select — the chatty form was a
-    ``withColumn`` loop: one full analysis pass per padded column."""
-    pads = [
-        f"CAST(NULL AS {other.schema[c].dataType.simpleString()}) AS {q(c)}"
-        for c in other.columns
-        if c not in key_cols
-    ]
-    return df.selectExpr("*", *pads)
 
 
 def null_lit_exprs(side: DataFrame, cols) -> list[str]:

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import queue
 import threading
-from concurrent.futures import Future
+from concurrent.futures import Future, wait
 
 from pyspark.sql import DataFrame
 
@@ -106,6 +106,34 @@ def submit(fn) -> "Future":
     return _POOL.submit(fn)
 
 
+def run_all(fns, parallelism: int | None = None) -> list:
+    """Run the independent callables ``fns`` on the shared pool, at most
+    ``parallelism`` at once (None: all at once), and return their
+    results in input order.
+
+    Failure-safe: a slot is taken BEFORE each submit, so a wide fan-out
+    never busies more than ``parallelism`` workers, and every submitted
+    call is waited for before the first failure (in input order) is
+    re-raised — no sibling outlives the call, so a caller's retry can
+    never race a still-running one.  Zero or one callable runs inline."""
+    fns = list(fns)
+    if len(fns) <= 1:
+        return [f() for f in fns]
+    sem = threading.Semaphore(parallelism) if parallelism else None
+    futs = []
+    for fn in fns:
+        if sem is not None:
+            sem.acquire()
+        fut = _POOL.submit(fn)
+        if sem is not None:
+            # released after the worker recycled itself (done callbacks
+            # run after the result is set), so the next submit reuses it
+            fut.add_done_callback(lambda _f: sem.release())
+        futs.append(fut)
+    wait(futs)
+    return [f.result() for f in futs]
+
+
 def pin_all(*dfs: "DataFrame | None") -> "list[DataFrame | None]":
     """Eagerly ``localCheckpoint`` every non-None input CONCURRENTLY and
     return the pinned frames in input order (None passes through).
@@ -113,16 +141,9 @@ def pin_all(*dfs: "DataFrame | None") -> "list[DataFrame | None]":
     another's result."""
     live = [(i, d) for i, d in enumerate(dfs) if d is not None]
     out: "list[DataFrame | None]" = list(dfs)
-    if len(live) <= 1:
-        for i, d in live:
-            out[i] = d.localCheckpoint(eager=True)
-        return out
-    futs = [
-        (i, _POOL.submit(lambda d=d: d.localCheckpoint(eager=True)))
-        for i, d in live
-    ]
-    for i, f in futs:
-        out[i] = f.result()
+    pinned = run_all([lambda d=d: d.localCheckpoint(eager=True) for _, d in live])
+    for (i, _), p in zip(live, pinned):
+        out[i] = p
     return out
 
 
@@ -153,8 +174,6 @@ def build_all(*thunks):
 
     Thunks must be mutually independent and must not mutate shared
     state; results keep input order, so downstream unions are
-    byte-identical to the serial construction."""
-    if len(thunks) <= 1:
-        return [t() for t in thunks]
-    futs = [_POOL.submit(t) for t in thunks]
-    return [f.result() for f in futs]
+    byte-identical to the serial construction.  Failures follow
+    :func:`run_all`."""
+    return run_all(thunks)

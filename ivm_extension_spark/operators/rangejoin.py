@@ -1,4 +1,5 @@
-"""Range (interval) join — point-in-interval, without the cross-join trap.
+"""Range (interval) join — point-in-interval, without the cross-join trap:
+the interval-bin candidate-pair generator for the counting-join kernel.
 
 ``left.pt BETWEEN right.lo AND right.hi`` has no equi-key, so Catalyst
 falls back to BroadcastNestedLoopJoin: O(|L| x |R|) comparisons.  The
@@ -13,6 +14,11 @@ Bin width is the knob: ~the median interval width is a good default
 one branch; split them (cap via ``max_bins_per_interval`` guard) or
 route them through the broadcast fallback.
 
+The maintained LEFT/FULL joins hand that binned equi-join (with the
+``lo <= pt <= hi`` re-check) to the delta algebra in countjoin.py; a
+point's match-count key is (``key_cols``…, ``point_col``), an
+interval's (``key_cols``…, ``lo_col``, ``hi_col``).
+
 At 100 TB: the binned join is a plain shuffle/broadcast hash join on
 (key?, bin) — all of Spark's join machinery (AQE, skew splitting)
 applies; nothing here is local-mode specific.
@@ -22,8 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ivm_extension_spark.operators import colops
-from ivm_extension_spark.operators.colops import q
+from ivm_extension_spark.operators import countjoin
 
 _BIN = "__rj_bin"
 
@@ -131,7 +136,7 @@ def range_join(
     probe = list(dict.fromkeys(
         [*key_cols, lo_col, hi_col, *_extra_refs(extra_cond, intervals.columns)]
     ))
-    unmatched_i = _null_pad_anti(intervals, joined, probe, points, key_cols)
+    unmatched_i = countjoin.null_pad(intervals, joined, probe, points, key_cols)
     return out.unionByName(unmatched_i.select(*out_cols))
 
 
@@ -172,23 +177,6 @@ def auto_range_bin_width(
     return width if width > 0 else 1.0
 
 
-def _null_pad_anti(
-    side: DataFrame,
-    joined: DataFrame,
-    probe_cols: list[str],
-    other: DataFrame,
-    key_cols: tuple[str, ...],
-) -> DataFrame:
-    """Rows of ``side`` whose ``probe_cols`` never appear among the
-    matched rows, padded with NULLs for ``other``'s non-key columns
-    (null-safe probe)."""
-    mk = colops.renamed(joined, probe_cols, "__mk_").distinct()
-    unmatched = side.join(
-        mk, on=colops.ns_eq(probe_cols, "__mk_"), how="left_anti"
-    )
-    return colops.null_pad(unmatched, other, key_cols)
-
-
 def _explode_interval_bins(
     intervals: DataFrame,
     lo_col: str,
@@ -224,6 +212,39 @@ def _explode_interval_bins(
     )
 
 
+def _binned_pairs(
+    point_col: str,
+    lo_col: str,
+    hi_col: str,
+    bin_width: float,
+    key_cols: tuple[str, ...],
+    max_bins_per_interval: int,
+    broadcast_deltas: bool,
+) -> countjoin.Match:
+    """The banded generator: points binned, intervals exploded to their
+    bins (empty/NULL intervals dropped, over-wide ones raise), equi-join
+    on (bin, keys), exact ``lo <= pt <= hi`` re-check."""
+
+    def match(a: DataFrame, b: DataFrame, broadcast: str | None) -> DataFrame:
+        p = a.withColumn(
+            _BIN, F.floor(F.col(point_col) / F.lit(bin_width)).cast("long")
+        )
+        i = _explode_interval_bins(b, lo_col, hi_col, bin_width, max_bins_per_interval)
+        if broadcast_deltas and broadcast == "left":
+            p = F.broadcast(p)
+        elif broadcast_deltas and broadcast == "right":
+            i = F.broadcast(i)
+        return (
+            p.join(i, on=[_BIN, *key_cols], how="inner")
+            .filter(
+                (F.col(point_col) >= F.col(lo_col)) & (F.col(point_col) <= F.col(hi_col))
+            )
+            .select(*a.columns, *[c for c in b.columns if c not in key_cols])
+        )
+
+    return match
+
+
 def range_left_join_delta(
     points: DataFrame,
     intervals: DataFrame,
@@ -238,229 +259,26 @@ def range_left_join_delta(
     broadcast_deltas: bool = True,
     full: bool = False,
 ) -> DataFrame:
-    """Δ(P ⟕range I) — incremental maintenance of the banded LEFT join,
-    the theta-outer-join case the equi rewrite rejects
-    (operators/rewrite.py _outer_join_delta: conjunctive equi only).
+    """Δ(P ⟕range I) — incremental maintenance of the banded LEFT join
+    (``full`` = FULL OUTER, see :func:`range_full_join_delta`):
+    countjoin.left_delta with the binned equi-join as the generator, so
+    Catalyst never plans a nested loop.  ``broadcast_deltas`` controls
+    the generator's delta-side broadcast hints.
 
-    Same algebra as the equi rule (matched three-branch + NULL-pad
-    anti-part via match-count zero crossings), with two changes:
-
-    - every theta join runs as a BINNED equi-join (see :func:`range_join`),
-      so Catalyst never falls back to a nested-loop plan;
-    - the match-count "key" of a preserved point row is (``key_cols``…,
-      ``point_col``): a point's match set against the interval table is
-      fully determined by those values, so counts group on them exactly
-      as the equi rule groups on join keys.
-
-    Deltas carry the bool multiplicity column (insert=true, delete=false)
-    and may be None on either side.  Scale shape: the big sides (P, I)
-    are only ever joined against BROADCAST delta-derived sets (binned
-    delta rows, affected-key sets, flip sets) — never shuffled; the only
-    exchanges are match-count aggregations over delta-matched slices.
-
-    Output: P columns + non-key I columns + the multiplicity bool.
-    """
-    from ivm_extension_spark.operators.rewrite import MULT_COL
-
-    if d_points is None and d_intervals is None:
-        raise ValueError("at least one side needs a delta")
-    bc = F.broadcast if broadcast_deltas else (lambda df: df)
-    sign = "__ivm_sign"
-    out_cols = [*points.columns, *[c for c in intervals.columns if c not in key_cols]]
-    kp = [*key_cols, point_col]  # the match-count key of a point row
-
-    def signed(d: DataFrame, w: str) -> DataFrame:
-        return d.withColumn(
-            w, F.when(F.col(MULT_COL), F.lit(1)).otherwise(F.lit(-1))
-        ).drop(MULT_COL)
-
-    dp = signed(d_points, "__wp") if d_points is not None else None
-    di = signed(d_intervals, "__wi") if d_intervals is not None else None
-
-    def pbin(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            _BIN, F.floor(F.col(point_col) / F.lit(bin_width)).cast("long")
-        )
-
-    def ibin(df: DataFrame) -> DataFrame:
-        # same explode as range_join: empty/NULL intervals dropped, an
-        # over-wide interval raises instead of silently losing matches
-        return _explode_interval_bins(
-            df, lo_col, hi_col, bin_width, max_bins_per_interval
-        )
-
-    in_range = (F.col(point_col) >= F.col(lo_col)) & (
-        F.col(point_col) <= F.col(hi_col)
+    Deltas carry the bool multiplicity column (insert=true,
+    delete=false) and may be None on either side.  Output: P columns +
+    non-key I columns + the multiplicity bool."""
+    rule = countjoin.full_delta if full else countjoin.left_delta
+    return rule(
+        points, intervals, d_points, d_intervals,
+        _binned_pairs(
+            point_col, lo_col, hi_col, bin_width, key_cols,
+            max_bins_per_interval, broadcast_deltas,
+        ),
+        key_cols,
+        [*key_cols, point_col],
+        [*key_cols, lo_col, hi_col],
     )
-
-    def matched(p: DataFrame, i: DataFrame, w_expr) -> DataFrame:
-        return (
-            p.join(i, on=[_BIN, *key_cols], how="inner")
-            .filter(in_range)
-            .select(*out_cols, w_expr.alias(sign))
-        )
-
-    null_i = [
-        F.lit(None).cast(intervals.schema[c].dataType).alias(c)
-        for c in intervals.columns
-        if c not in key_cols
-    ]
-
-    branches: list[DataFrame] = []
-    # ---- matched part: the three-branch inner rule over binned joins
-    if dp is not None:
-        branches.append(matched(bc(pbin(dp)), ibin(intervals), F.col("__wp")))
-    if di is not None:
-        branches.append(matched(pbin(points), bc(ibin(di)), F.col("__wi")))
-    if dp is not None and di is not None:
-        branches.append(
-            matched(bc(pbin(dp)), bc(ibin(di)), F.col("__wp") * F.col("__wi"))
-        )
-
-    # ---- anti part, term 1: ΔP rows with zero matches in I' = I ∪ ΔI
-    if dp is not None:
-        dpk = pbin(dp.select(*kp).distinct())
-        iprime = ibin(intervals).withColumn("__w", F.lit(1)).select(
-            *key_cols, lo_col, hi_col, _BIN, "__w"
-        )
-        if di is not None:
-            iprime = iprime.unionByName(
-                ibin(di).select(
-                    *key_cols, lo_col, hi_col, _BIN, F.col("__wi").alias("__w")
-                )
-            )
-        m_pos = (
-            iprime.join(bc(dpk), on=[_BIN, *key_cols], how="inner")
-            .filter(in_range)
-            .groupBy(*kp)
-            .agg(F.sum("__w").alias("__m"))
-            .filter(F.col("__m") > 0)
-            .select(*kp)
-        )
-        t1 = dp.join(bc(m_pos), on=kp, how="left_anti")
-        branches.append(
-            t1.select(*points.columns, *null_i, F.col("__wp").alias(sign))
-        )
-
-    # ---- anti part, term 2: existing P rows whose match count crosses 0
-    if di is not None:
-        # Δm per affected point-key: DISTINCT point keys binned against
-        # the BROADCAST delta intervals — only matching keys reach the
-        # aggregation.  Distinct is load-bearing: the match count is a
-        # per-KEY quantity, and several point rows sharing a key would
-        # otherwise multiply Δm and fake a zero crossing (e.g. 6 points
-        # at the same value × one deleted interval → Δm=-6, not -1)
-        dm = (
-            pbin(points.select(*kp).distinct())
-            .join(bc(ibin(di)), on=[_BIN, *key_cols], how="inner")
-            .filter(in_range)
-            .groupBy(*kp)
-            .agg(F.sum("__wi").alias("__dm"))
-            .filter(F.col("__dm") != 0)
-        )
-        # old counts for exactly those keys: I scanned once, probed
-        # against the broadcast affected-key set
-        m_old = (
-            ibin(intervals)
-            .join(bc(pbin(dm.select(*kp))), on=[_BIN, *key_cols], how="inner")
-            .filter(in_range)
-            .groupBy(*kp)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        flips = (
-            dm.join(m_old, on=kp, how="left")
-            .selectExpr(*[q(c) for c in kp], colops.flip_case(-1))
-            .filter("`__flip` IS NOT NULL")
-        )
-        t2 = points.join(bc(flips), on=kp, how="inner")
-        branches.append(
-            t2.select(*points.columns, *null_i, F.col("__flip").alias(sign))
-        )
-
-    if full:
-        # interval-preserved side (Δ(P ⟗range I)): symmetric machinery.
-        # An interval row's match set is determined by (key_cols, lo, hi)
-        # — empty/NULL-bounded intervals match nothing but ARE preserved.
-        ikey = [*key_cols, lo_col, hi_col]
-
-        def _null_points(df: DataFrame, w_col: str) -> DataFrame:
-            return df.select(
-                *[
-                    F.col(c)
-                    if c in key_cols
-                    else F.lit(None).cast(points.schema[c].dataType).alias(c)
-                    for c in points.columns
-                ],
-                *[F.col(c) for c in intervals.columns if c not in key_cols],
-                F.col(w_col).alias(sign),
-            )
-
-        def _ikey_anti(side_df: DataFrame, keys_df: DataFrame) -> DataFrame:
-            mk = colops.renamed(keys_df, ikey, "__ik_").distinct()
-            return side_df.join(
-                bc(mk), on=colops.ns_eq(ikey, "__ik_"), how="left_anti"
-            )
-
-        # term 1': ΔI rows whose key has ZERO matches in P' = P ∪ ΔP
-        # carry their own NULL-padded row in/out with their sign
-        if di is not None:
-            dik = ibin(di.select(*ikey).distinct())
-            pprime = pbin(points).select(
-                *key_cols, point_col, _BIN, F.lit(1).alias("__w")
-            )
-            if dp is not None:
-                pprime = pprime.unionByName(
-                    pbin(dp).select(
-                        *key_cols, point_col, _BIN, F.col("__wp").alias("__w")
-                    )
-                )
-            mi_pos = (
-                pprime.join(bc(dik), on=[_BIN, *key_cols], how="inner")
-                .filter(in_range)
-                .groupBy(*ikey)
-                .agg(F.sum("__w").alias("__m"))
-                .filter(F.col("__m") > 0)
-                .select(*ikey)
-            )
-            branches.append(_null_points(_ikey_anti(di, mi_pos), "__wi"))
-
-        # term 2': existing I rows whose match count crosses zero under
-        # ΔP gain (-1) or lose (+1) their NULL-padded row.  Δm per
-        # DISTINCT interval key (several interval rows sharing a key
-        # flip together — the same distinct-keys rule as the point side)
-        if dp is not None:
-            dmi = (
-                ibin(intervals.select(*ikey).distinct())
-                .join(bc(pbin(dp)), on=[_BIN, *key_cols], how="inner")
-                .filter(in_range)
-                .groupBy(*ikey)
-                .agg(F.sum("__wp").alias("__dm"))
-                .filter(F.col("__dm") != 0)
-            )
-            mi_old = (
-                pbin(points)
-                .join(bc(ibin(dmi.select(*ikey))), on=[_BIN, *key_cols], how="inner")
-                .filter(in_range)
-                .groupBy(*ikey)
-                .agg(F.count(F.lit(1)).alias("__mold"))
-            )
-            flips_i = (
-                dmi.join(mi_old, on=ikey, how="left")
-                .selectExpr(*[q(c) for c in ikey], colops.flip_case(-1))
-                .filter("`__flip` IS NOT NULL")
-                .selectExpr(
-                    *[f"{q(c)} AS {q('__ik_' + c)}" for c in ikey], "`__flip`"
-                )
-            )
-            t2i = intervals.join(
-                bc(flips_i), on=colops.ns_eq(ikey, "__ik_"), how="inner"
-            ).drop(*[f"__ik_{c}" for c in ikey])
-            branches.append(_null_points(t2i, "__flip"))
-
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.select(*out_cols, (F.col(sign) > 0).alias(MULT_COL))
 
 
 def range_full_join_delta(
@@ -476,11 +294,9 @@ def range_full_join_delta(
     max_bins_per_interval: int = 10_000,
     broadcast_deltas: bool = True,
 ) -> DataFrame:
-    """Δ(P ⟗range I) — FULL OUTER banded join maintenance: the LEFT
-    rule's terms plus the interval-preserved side (ΔI arrivals/departures
-    of pointless intervals, and zero-crossing flips of existing intervals
-    under ΔP).  Same scale shape: the big sides are only ever probed by
-    broadcast delta-derived sets."""
+    """Δ(P ⟗range I) — FULL OUTER banded join maintenance:
+    countjoin.full_delta with the binned equi-join as the generator
+    (empty/NULL-bounded intervals match nothing but ARE preserved)."""
     return range_left_join_delta(
         points,
         intervals,

@@ -58,7 +58,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ivm_extension_spark.operators import colops
+from ivm_extension_spark.operators import colops, countjoin
 from ivm_extension_spark.operators.colops import q
 from ivm_extension_spark.operators.pin import build_all, pin_all, pin_async
 from ivm_extension_spark.operators.thetajoin import sub_outside_literals
@@ -1043,12 +1043,11 @@ def _outer_join_delta(
                 .groupBy(*knames)
                 .agg(F.count(F.lit(1)).alias("__mold"))
             )
-            flips = (
-                db_key_dm.join(m_old, on=knames, how="left")
-                .selectExpr(*[q(k) for k in knames], colops.flip_case(-1))
-                .filter("`__flip` IS NOT NULL")
-                .alias("__fl")
-            )
+            # only the crossing step is countjoin's: these counts come
+            # straight from B's equi keys with no probe of the preserved
+            # side, which the kernel's probe-based terms would add (a
+            # distinct scan of P per batch)
+            flips = countjoin.crossings(db_key_dm, m_old, knames).alias("__fl")
             flip_cond = None
             for (pe, _), k in zip(opairs, knames):
                 c = F.expr(pe) == F.col(f"__fl.{k}")
@@ -1057,7 +1056,7 @@ def _outer_join_delta(
             out.append(
                 t2.select(
                     *pad([F.col(f"{pname}.{c}") for c in P.columns]),
-                    F.col("__fl.__flip").alias(_SIGN),
+                    (-F.col("__fl.__flip")).alias(_SIGN),
                 )
             )
         return out
@@ -1799,14 +1798,11 @@ def _semi_anti_delta(
             .groupBy(*knames)
             .agg(F.count(F.lit(1)).alias("__mold"))
         )
-        flips = (
-            db_key_dm.join(m_old, on=knames, how="left")
-            .selectExpr(
-                *[q(k) for k in knames], colops.flip_case(-1 if anti else 1)
-            )
-            .filter("`__flip` IS NOT NULL")
-            .alias("__fl")
-        )
+        # only the crossing step is countjoin's: these counts come
+        # straight from R's equi keys with no probe of L, which the
+        # kernel's probe-based terms would add (a distinct scan of L per
+        # batch)
+        flips = countjoin.crossings(db_key_dm, m_old, knames).alias("__fl")
         cond = None
         for (pe, _), k in zip(pairs, knames):
             c = F.expr(pe) == F.col(f"__fl.{k}")
@@ -1815,7 +1811,7 @@ def _semi_anti_delta(
         branches.append(
             t2.selectExpr(
                 *[f"{q(lname)}.{q(c)}" for c in lcols],
-                f"`__fl`.`__flip` AS {_SIGN}",
+                f"{'-' if anti else ''}`__fl`.`__flip` AS {_SIGN}",
             )
         )
 

@@ -170,7 +170,7 @@ def window_view_delta(
         apply_delta_to_table,
         bag_diff_cdc,
     )
-    from ivm_extension_spark.operators.thetajoin import _ns_join
+    from ivm_extension_spark.operators.countjoin import probe_join
 
     keys = list(partition_cols)
     # EAGER pins: t_a feeds the old- and new-side window recomputes —
@@ -185,7 +185,7 @@ def window_view_delta(
     # blocks inside t_a's broadcast build)
     delta = delta.localCheckpoint(eager=True)
     ak = delta.select(*keys).distinct()
-    t_a = _ns_join(table, ak, keys, "leftsemi").localCheckpoint(eager=True)
+    t_a = probe_join(table, ak, keys, "leftsemi").localCheckpoint(eager=True)
     t_new = apply_delta_to_table(t_a, delta)
     # old- and new-side window recomputes: independent constructions
     # over the pinned t_a — build them concurrently (pin.build_all)

@@ -60,18 +60,6 @@ def test_signed_duplicate_name_fallback(spark):
     assert row["__w"] == 1 and mult not in s.columns
 
 
-def test_null_pad_types(spark):
-    df = spark.createDataFrame([(1,)], "a int")
-    other = spark.createDataFrame(
-        [(1, 2.5, "x")], "a int, price double, tag string"
-    )
-    out = colops.null_pad(df, other, key_cols=("a",))
-    assert out.columns == ["a", "price", "tag"]
-    assert dict(out.dtypes)["price"] == "double"
-    r = out.collect()[0]
-    assert r.price is None and r.tag is None
-
-
 def test_flip_case_matches_withcolumn_chain(spark):
     rows = [(0, 3), (2, -2), (1, 1), (4, -1), (0, -1)]
     j = spark.createDataFrame(rows, "__mold int, __dm int")

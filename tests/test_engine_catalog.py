@@ -346,3 +346,35 @@ def test_merge_views_concurrent_equals_sequential(spark):
 
     with pytest.raises(IVMError, match="distinct"):
         conc.merge_views(["sums", "sums"])
+
+    # fault injection: one view's merge raises while its siblings are
+    # still merging — the call must return only after every sibling
+    # finished, and retrying just the failed view reaches the clean state
+    import threading
+    import time
+
+    flaky = build()
+    real = flaky.merge_view
+    lock, running = threading.Lock(), set()
+
+    def merge_or_fail(name, *a, **kw):
+        with lock:
+            running.add(name)
+        try:
+            if name == "cnt":
+                raise RuntimeError("injected merge failure")
+            time.sleep(0.5)
+            return real(name, *a, **kw)
+        finally:
+            with lock:
+                running.discard(name)
+
+    flaky.merge_view = merge_or_fail
+    with pytest.raises(RuntimeError, match="injected"):
+        flaky.merge_views(["sums", "cnt", "hi"])
+    assert not running
+    flaky.merge_view = real
+    flaky.merge_view("cnt")
+    for v in ("sums", "cnt", "hi"):
+        assert sorted(rows(flaky.read_view(v))) == sorted(rows(seq.read_view(v)))
+        assert flaky._merge_counts[v] == 1

@@ -498,3 +498,21 @@ def test_auto_dyadic_bins_cover_negative_domain(spark):
         ).select("lid", "rid").collect()
     }
     assert got == _brute(l, r, "x < y")
+
+
+@pytest.mark.parametrize("case", ["bin_column_exists", "inf_width", "nan_origin"])
+def test_binned_rejects_bad_inputs(spark, case):
+    # guarded on the Python side: a pre-existing bin column would be
+    # silently duplicated, a non-finite literal would emit invalid SQL
+    from ivm_extension_spark.operators.ineqjoin import _BIN, _binned
+
+    df = spark.createDataFrame([(1.0,)], "x double")
+    kw = dict(bin_width=1.0, levels=4, origin=0.0)
+    if case == "bin_column_exists":
+        df = df.withColumn(_BIN, F.lit(0))
+    elif case == "inf_width":
+        kw["bin_width"] = float("inf")
+    else:
+        kw["origin"] = float("nan")
+    with pytest.raises(ValueError):
+        _binned(df, "x", **kw)

@@ -74,3 +74,34 @@ def test_build_all_runs_thunks_concurrently():
     t0 = time.perf_counter()
     assert build_all(t1, t2) == [1, 2]
     assert time.perf_counter() - t0 < 5
+
+
+def test_run_all_bounds_concurrency_and_drains_before_raising():
+    # the slot is taken BEFORE submit: never more than `parallelism`
+    # callables in flight; a failure is re-raised only after every
+    # sibling finished, so nothing outlives the call
+    from ivm_extension_spark.operators.pin import run_all
+
+    lock = threading.Lock()
+    live, peak, finished = [0], [0], []
+
+    def work(i):
+        with lock:
+            live[0] += 1
+            peak[0] = max(peak[0], live[0])
+        try:
+            if i == 1:
+                raise RuntimeError("injected")
+            time.sleep(0.2)
+            return i
+        finally:
+            with lock:
+                live[0] -= 1
+                finished.append(i)
+
+    assert run_all([lambda i=i: work(i) for i in (0, 2, 3, 4)], 2) == [0, 2, 3, 4]
+    assert peak[0] <= 2
+    finished.clear()
+    with pytest.raises(RuntimeError, match="injected"):
+        run_all([lambda i=i: work(i) for i in range(5)], 2)
+    assert sorted(finished) == [0, 1, 2, 3, 4] and live[0] == 0
